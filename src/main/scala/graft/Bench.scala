@@ -1,12 +1,14 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
+
+import graft.tools.Measure
 
 /** Per-round benchmark: times every SparkEntry query at the env-selected
-  * scale factor and prints ONE JSON line. Full evaluation is forced with
-  * the `noop` datasource (every column materialized — a `.count()` would
-  * let Catalyst prune the projection and time a near-empty scan). Failed
-  * queries are reported as value -1, never as a fake timing.
+  * scale factor and prints ONE JSON line. Each query is timed under
+  * [[graft.tools.Measure]]'s protocol (reap → warm-up → iterations, full
+  * evaluation through the `noop` sink). Failed queries are reported as
+  * value -1, never as a fake timing.
   *
   * Reports the per-query MEDIAN of ≥3 iterations (SPARK_GRAFT_BENCH_ITERS
   * to override): a single shared local[32] JVM shows 10–20× per-query
@@ -18,8 +20,8 @@ import org.apache.spark.sql.SparkSession
   * unparseable — rounds 4, 5 AND 8 were lost exactly this way (round 8:
   * 138 per-query entries + the scaled-ops map pushed past the tail and
   * the driver recorded `parsed: null`). So the line now carries only the
-  * aggregate fields plus the SLOWEST queries (short prefix keys,
-  * 2-decimal seconds; SPARK_GRAFT_BENCH_TOPQ to resize, default 12) and
+  * aggregate fields plus the [[TopQ]] SLOWEST queries (short prefix keys,
+  * 2-decimal seconds) and
   * a scaled-tier SUMMARY — the full-name full-precision per-query and
   * per-scaled-op report lives in BENCH_DETAIL.json. CONVENTION (judge
   * round 9): every local Bench run OVERWRITES BENCH_DETAIL.json — the
@@ -34,11 +36,8 @@ import org.apache.spark.sql.SparkSession
   * SPARK_GRAFT_BENCH_ONLY=<substring>[,<substring>...] restricts the run
   * to matching query names — the local iteration loop for one operator. */
 object Bench {
-  private def median(xs: Seq[Double]): Double = {
-    val s = xs.sorted
-    val n = s.length
-    if (n % 2 == 1) s(n / 2) else (s(n / 2 - 1) + s(n / 2)) / 2.0
-  }
+  /** Slowest queries carried on the one-line JSON. */
+  private val TopQ = 12
 
   // Locale.ROOT: the f-interpolator uses the default locale, and a
   // comma-decimal locale (de_DE) would render the one machine-parsed
@@ -52,57 +51,10 @@ object Bench {
   private def s2(v: Double): String =
     String.format(java.util.Locale.ROOT, "%.2f", Double.box(v))
 
-  // 1-minute loadavg (first /proc/loadavg field); -1 when unreadable
-  // (non-Linux dev box) — never throws after the queries already ran
-  private def loadAvg(): Double =
-    try {
-      val src = scala.io.Source.fromFile("/proc/loadavg")
-      try src.mkString.split("\\s+")(0).toDouble finally src.close()
-    } catch { case _: Throwable => -1.0 }
-
-  // (total busy CPU jiffies across the box, this JVM's own jiffies) —
-  // the difference over a wall-clock window is EXTERNAL load, the
-  // signal loadavg can't give (loadavg counts the bench's own 32
-  // threads, so on a healthy idle box it reads 4-6 and any absolute or
-  // relative loadavg threshold mis-tags; measured round 11). USER_HZ
-  // is 100 on every Linux ABI. (-1, -1) when /proc is unreadable.
-  private def cpuJiffies(): (Long, Long) =
-    try {
-      val stat = scala.io.Source.fromFile("/proc/stat")
-      val line = try stat.getLines().next() finally stat.close()
-      val parts = line.trim.split("\\s+").drop(1).map(_.toLong)
-      // busy = everything except idle (idx 3) and iowait (idx 4)
-      val busy = parts.zipWithIndex.collect { case (v, i) if i != 3 && i != 4 => v }.sum
-      val selfSrc = scala.io.Source.fromFile("/proc/self/stat")
-      val s = try selfSrc.mkString finally selfSrc.close()
-      // comm may contain spaces — fields resume after the last ')'
-      val rest = s.substring(s.lastIndexOf(')') + 2).split(" ")
-      (busy, rest(11).toLong + rest(12).toLong) // utime + stime
-    } catch { case _: Throwable => (-1L, -1L) }
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val loadBefore = loadAvg()
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Every in-repo unpartitioned window runs over a bounded input (block
-    // summaries, top-k survivors, ≤10-row header grids) — the WindowExec
-    // warning is a false positive there, and dozens of repeats threaten
-    // the 2,000-char stdout tail this main's JSON line must survive in.
-    // Plan hygiene is enforced by PlanSpec, not log lines.
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.sql.execution.window.WindowExec",
-      org.apache.logging.log4j.Level.ERROR)
+    val loadBefore = Measure.loadAvg()
+    val spark = Measure.session("graft-bench")
 
     if (SparkEntry.queries.isEmpty) {
       System.err.println("[bench] FATAL: SparkEntry.queries is empty — nothing to measure")
@@ -112,8 +64,8 @@ object Bench {
 
     // session warmup: run the flagship once so JVM/codegen/scheduler
     // warmup is not charged to whichever query happens to run first
-    try SparkEntry.entry(spark).write.mode("overwrite").format("noop").save()
-    catch { case e: Throwable => System.err.println(s"[bench] warmup failed: ${e.getMessage}") }
+    try Measure.sink(SparkEntry.entry(spark))
+    catch { case NonFatal(e) => System.err.println(s"[bench] warmup failed: ${e.getMessage}") }
     // one-time co-purchase snapshot build is SETUP (the scaled tier's
     // materialize precedent): post-reap graph queries read it back in
     // seconds instead of paying the suite's densest self-join. Its cost
@@ -122,7 +74,7 @@ object Bench {
     // outside every per-query median).
     val setupT0 = System.nanoTime()
     try graft.queries.PipelineQueries.snapshotCopurchase(spark, sfDir)
-    catch { case e: Throwable => System.err.println(s"[bench] snapshot failed: ${e.getMessage}") }
+    catch { case NonFatal(e) => System.err.println(s"[bench] snapshot failed: ${e.getMessage}") }
     val setupSec = (System.nanoTime() - setupT0) / 1e9
 
     val iterations = sys.env.getOrElse("SPARK_GRAFT_BENCH_ITERS", "3").toInt
@@ -135,100 +87,25 @@ object Bench {
       spark.stop()
       sys.exit(1)
     }
-    // Between queries: reap leaked storage. localCheckpoint RDDs (e.g.
-    // connected components' per-round labels) stay persisted until the
-    // ContextCleaner notices their DataFrame was GC'd — across 73 queries
-    // × 3 iterations in one 8-16g JVM the leftovers evict working memory
-    // and turn late queries into spill-bound outliers (round 5 measured
-    // p29 at 56 s in-suite vs 2.3 s isolated; the ops were never slow,
-    // the JVM was). Not timed: a real cluster job gets a fresh app.
-    // ORDER MATTERS: the shared query-family memos are dropped FIRST via
-    // their DataFrame handles (unpersisting their RDDs directly clears
-    // the storage level permanently while the CacheManager keeps routing
-    // through the dead InMemoryRelation — every post-reap reference then
-    // recomputes with NO re-cache; round 11's p134 driver iterations
-    // [44.5, 44.3, 7.1] were exactly this: each "warm" iteration re-ran
-    // the co-purchase self-join once per reference). The raw-RDD sweep
-    // after catches only what no memo owns.
-    // clearCache AFTER the memo drop: the raw-RDD sweep clears STORAGE
-    // but leaks the CacheManager ENTRY — ops-internal persists
-    // (triangleCount's oriented edges, pageRank's loop invariants, every
-    // kCorePeel round) are swept that way, and across 405 queries × 3
-    // iterations the dead entries pile up: every later persist/lookup
-    // pays a sameResult() walk over thousands of stale plans AND fresh
-    // plans get routed through dead InMemoryRelations (recompute, no
-    // re-cache). Measured this round: late-suite queries ran 1.3–1.8×
-    // their fresh-JVM cost (p154 3.56 vs 2.10, p152 2.97 vs 1.39, p156
-    // 2.55 vs 1.25, p134 11.09 vs 6.55); clearCache() drops the entries
-    // with the storage so each query starts against an empty cache map.
-    def reapBlocks(): Unit = {
-      graft.queries.PipelineQueries.reapMemos(spark)
-      spark.sharedState.cacheManager.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-      System.gc()
-    }
     // Per-query EXTERNAL load rides next to each timing: round 10's
     // driver ran at ambient load ~4 and five graph medians read as
-    // regressions that idle re-runs disproved — a judge without re-run
-    // budget would have failed the round on an artifact that couldn't
-    // say "measured on a busy box". loadavg can't carry this signal
-    // (it counts the bench's own 32 threads: a healthy idle run sits
-    // at 4-6, and both absolute and self-relative loadavg cutoffs
-    // mis-tagged 20-85% of an ambient-idle run when measured), so each
-    // query's window is metered as (total busy jiffies − this JVM's
-    // jiffies) / wall = average CPU cores burned by OTHER processes
-    // while the query was measured. Queries above 1.0 external core
-    // are tagged `hiload` (suspect medians) in both artifacts; the
-    // per-iteration (sec, loadavg) pairs stay in the detail as raw
-    // context.
-    // Per-query WARM-UP (round-17 verdict item 1a, declared in
-    // OPTIMIZATION_r18.md): one untimed run after the reap so the timed
-    // median measures the operator at steady state, not the C2/codegen
-    // warm-up slope — p134's iterations decayed 14 → 9 → 9.5 → 4.9 →
-    // 4.7 → 4.6 s and the old 3-iteration median landed on the slope,
-    // making the suite's biggest number a JIT artifact. The warm-up also
-    // absorbs each query's one-time internal cache build (iterations
-    // were already warm for caches from iteration 2 on — same boundary,
-    // now uniform from iteration 1). SPARK_GRAFT_BENCH_WARMUP=0 restores
-    // the old protocol; the JSON line carries `warmup` so every artifact
-    // self-identifies which protocol produced it. Additions-only: the
-    // timed region, sink, iteration count and median are unchanged.
-    val warmups =
-      try sys.env.getOrElse("SPARK_GRAFT_BENCH_WARMUP", "1").toInt
-      catch { case _: Throwable => 1 }
+    // regressions that idle re-runs disproved. Queries above 1.0
+    // external core (Measure.Timed.extCores) are tagged `hiload`
+    // (suspect medians) in both artifacts; the per-iteration (sec,
+    // loadavg) pairs stay in the detail as raw context. The JSON line
+    // carries `warmup` so every artifact self-identifies its protocol.
+    val warmups = Measure.warmups
     val perQuery = selected.map { case (name, fn) =>
-      reapBlocks()
-      (1 to warmups).foreach { _ =>
-        try fn(spark, sfDir).write.mode("overwrite").format("noop").save()
-        catch { case _: Throwable => () } // timed loop reports the failure
+      Measure.reap(spark)
+      val timed = Measure.run(warmups, iterations, s"[bench] $name") {
+        Measure.sink(fn(spark, sfDir))
       }
-      val (tb0, sj0) = cpuJiffies()
-      val tq0 = System.nanoTime()
-      val iterRecs = (1 to iterations).flatMap { _ =>
-        val l = loadAvg()
-        val t0 = System.nanoTime()
-        try {
-          fn(spark, sfDir).write.mode("overwrite").format("noop").save()
-          Some(((System.nanoTime() - t0) / 1e9, l))
-        } catch {
-          case e: Throwable =>
-            System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
-            None
-        }
-      }
-      val (tb1, sj1) = cpuJiffies()
-      val wall = (System.nanoTime() - tq0) / 1e9
-      val extCores =
-        if (tb0 < 0 || tb1 < 0 || wall <= 0) -1.0
-        else math.max(0.0, ((tb1 - tb0) - (sj1 - sj0)) / 100.0 / wall)
-      if (iterRecs.isEmpty) failed += 1
-      (name,
-        if (iterRecs.isEmpty) -1.0 else median(iterRecs.map(_._1)),
-        iterRecs, extCores)
+      if (timed.samples.isEmpty) failed += 1
+      (name, if (timed.samples.isEmpty) -1.0 else Measure.median(timed.secs), timed)
     }
-    val results = perQuery.map { case (name, med, _, _) => name -> med }
+    val results = perQuery.map { case (name, med, _) => name -> med }
     val hiload = perQuery.collect {
-      case (name, med, _, ext) if med >= 0 && ext > 1.0 => name
+      case (name, med, timed) if med >= 0 && timed.extCores > 1.0 => name
     }
     if (hiload.nonEmpty)
       System.err.println(s"[bench] WARNING: ${hiload.length} queries measured " +
@@ -242,13 +119,11 @@ object Bench {
     // to the median so a reader can adjudicate a suspect median without
     // re-running: the min is the code's demonstrated cost, the spread
     // is the environment's.
-    val qmins = perQuery.collect { case (name, med, recs, _) if med >= 0 =>
-      name -> recs.map(_._1).min
+    val qmins = perQuery.collect { case (name, med, timed) if med >= 0 =>
+      name -> timed.secs.min
     }.toMap
     val varied = perQuery.collect {
-      case (name, med, recs, _)
-          if med >= 0 && recs.length >= 2 && recs.map(_._1).min > 0 &&
-            recs.map(_._1).max / recs.map(_._1).min > 3.0 => name
+      case (name, med, timed) if med >= 0 && timed.varied => name
     }
     if (varied.nonEmpty)
       System.err.println(s"[bench] WARNING: ${varied.length} queries with " +
@@ -267,18 +142,18 @@ object Bench {
       // not throw after every query already ran and lose the JSON line
       val scale = sys.env.getOrElse("SPARK_GRAFT_BENCH_SCALE", "20").toInt
       if (scale <= 1) Seq.empty else {
-        reapBlocks()
+        Measure.reap(spark)
         val evScale = math.max(scale / 2, 1)
-        val docsPath = graft.tools.ScaleData.materialize(spark, sfDir, "documents", scale, cpus.toInt)
-        val eventsPath = graft.tools.ScaleData.materialize(spark, sfDir, "events", evScale, cpus.toInt)
-        val embPath = graft.tools.ScaleData.materialize(spark, sfDir, "embeddings", scale, cpus.toInt)
+        val docsPath = graft.tools.ScaleData.materialize(spark, sfDir, "documents", scale, Measure.cores)
+        val eventsPath = graft.tools.ScaleData.materialize(spark, sfDir, "events", evScale, Measure.cores)
+        val embPath = graft.tools.ScaleData.materialize(spark, sfDir, "embeddings", scale, Measure.cores)
         val ops = graft.tools.ScaledOps.run(spark, docsPath, eventsPath, embPath)
         failed += ops.count(_.median < 0)
         scaledMeta = s""""docs_x":$scale,"events_x":$evScale,"""
         ops
       }
     } catch {
-      case e: Throwable =>
+      case NonFatal(e) =>
         System.err.println(s"[bench] scaled tier failed: ${e.getMessage}")
         failed += 1
         Seq.empty
@@ -313,13 +188,12 @@ object Bench {
     // comparisons adjudicate environment noise without re-running
     val totalMin =
       results.collect { case (k, v) if v >= 0 => qmins.getOrElse(k, v) }.sum
-    val loadAfter = loadAvg()
+    val loadAfter = Measure.loadAvg()
     val loadJson = s""","load_before":${s2(loadBefore)},"load_after":${s2(loadAfter)}"""
     // the line carries only the slowest queries (failures first, value
     // -1) — short prefix keys, 2 decimals; everything is in the detail
-    val topQ = try sys.env.getOrElse("SPARK_GRAFT_BENCH_TOPQ", "12").toInt catch { case _: Throwable => 12 }
     val shortQs = results.sortBy { case (_, v) => if (v < 0) Double.MinValue else -v }
-      .take(topQ)
+      .take(TopQ)
       .map { case (k, v) => "\"" + k.takeWhile(_ != '_') + "\":" + s2(v) }
       .mkString("{", ",", "}")
     val line = s"""{"metric":"total","value":${s3(total)},"total_min":${s3(totalMin)},"unit":"sec","n_queries":${results.length},"queries":$shortQs,"failed":$failed,"hiload":${hiload.length},"varied":${varied.length},"iterations":$iterations,"warmup":$warmups,"setup_sec":${s2(setupSec)},"sf":"$sfDir","detail":"BENCH_DETAIL.json"$loadJson$scaledLineJson}"""
@@ -328,12 +202,12 @@ object Bench {
     // per-iteration (sec, loadavg-at-start) pairs + per-query external
     // busy cores: the self-adjudication record — lets a reader see
     // which medians were measured against a busy box
-    val iterQs = perQuery.map { case (k, _, recs, _) =>
-      "\"" + k + "\":" + recs.map { case (sec, l) =>
+    val iterQs = perQuery.map { case (k, _, timed) =>
+      "\"" + k + "\":" + timed.samples.map { case Measure.Sample(sec, l) =>
         s"[${s3(sec)},${s2(l)}]" }.mkString("[", ",", "]")
     }.mkString("{", ",", "}")
-    val extQs = perQuery.map { case (k, _, _, ext) =>
-      "\"" + k + "\":" + s2(ext)
+    val extQs = perQuery.map { case (k, _, timed) =>
+      "\"" + k + "\":" + s2(timed.extCores)
     }.mkString("{", ",", "}")
     val minQs = qmins.toSeq.sortBy(_._1).map { case (k, v) =>
       "\"" + k + "\":" + s3(v)
@@ -344,7 +218,7 @@ object Bench {
     try {
       val w = new java.io.PrintWriter("BENCH_DETAIL.json", "UTF-8")
       try w.println(detail) finally w.close()
-    } catch { case e: Throwable => System.err.println(s"[bench] detail write failed: ${e.getMessage}") }
+    } catch { case NonFatal(e) => System.err.println(s"[bench] detail write failed: ${e.getMessage}") }
     if (line.length > 1850)
       System.err.println(s"[bench] WARNING: JSON line is ${line.length} chars — may overflow the 2000-char tail")
     println(line)

@@ -12,28 +12,21 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * (pd.to_numeric(errors="coerce"), /root/reference/src/transform_pipeline.py:52).
   */
 object GraftSession {
+  /** The one session builder: master, app, shuffle partitions sized to
+    * cores, warehouse and UI here; every engine conf comes from [[tune]]
+    * so the two paths cannot drift. */
   def local(cores: Int = 32, appName: String = "graft"): SparkSession = {
     val spark = SparkSession
       .builder()
       .master(s"local[$cores]")
       .appName(appName)
       .config("spark.sql.shuffle.partitions", cores.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // parquet TIMESTAMP(isAdjustedToUTC=false) loads as TIMESTAMP_LTZ
-      // (wall clock = session UTC ⇒ same epoch micros DuckDB sees), not
-      // TIMESTAMP_NTZ — unix_micros & friends require LTZ, and every
-      // oracle compares epoch values under UTC
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
       .config("spark.sql.warehouse.dir",
         s"${System.getProperty("java.io.tmpdir")}/graft-warehouse")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    graft.functions.GraftOptimizations.install(spark)
-    spark
+    tune(spark)
   }
 
   /** Apply engine-required runtime confs to an externally-created session
@@ -43,6 +36,10 @@ object GraftSession {
     spark.conf.set("spark.sql.ansi.enabled", "false")
     spark.conf.set("spark.sql.adaptive.enabled", "true")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    // parquet TIMESTAMP(isAdjustedToUTC=false) loads as TIMESTAMP_LTZ
+    // (wall clock = session UTC ⇒ same epoch micros DuckDB sees), not
+    // TIMESTAMP_NTZ — unix_micros & friends require LTZ, and every
+    // oracle compares epoch values under UTC
     spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
     graft.functions.GraftOptimizations.install(spark)
     spark

@@ -1,8 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.functions.udf
-
 /** Ratcliff/Obershelp sequence similarity — the metric behind the
   * reference's fuzzy importer matching
   * (/root/reference/src/importer_standarizer.py:63-64 uses Python
@@ -10,8 +7,9 @@ import org.apache.spark.sql.functions.udf
   * the total size of matching blocks found by recursively taking the
   * longest common substring and recursing on both sides.
   *
-  * Implemented as plain Scala (driver-usable for header matching) plus a
-  * registered UDF for distributed scoring. O(|a|*|b|) per call — fine for
+  * Implemented as plain Scala (driver-usable for header matching); the
+  * distributed form is the native `similarity_ratio` expression
+  * (SimilarityExpression). O(|a|*|b|) per call — fine for
   * short names; at 100 TB scale pair this with blocking (FuzzyJoin
   * .bestMatchBlocked) so the quadratic scorer only sees banded candidates.
   *
@@ -88,14 +86,6 @@ object Similarity {
     def strip(s: String) = if (s == null) null else s.filterNot(c => c == ' ' || c == '\t' || c == '.' || c == '-')
     ratio(strip(a), strip(b))
   }
-
-  val similarityUdf = udf(ratio _)
-
-  def similarity_ratio(a: Column, b: Column): Column = similarityUdf(a, b)
-
-  /** Register `similarity_ratio(a, b)` for SQL use. */
-  def register(spark: SparkSession): Unit =
-    spark.udf.register("similarity_ratio", ratio _)
 
   /** JARO-WINKLER similarity — the record-linkage scorer alongside
     * [[ratio]]: Jaro's windowed match/transposition count, boosted for

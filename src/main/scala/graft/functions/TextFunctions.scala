@@ -2,7 +2,7 @@ package graft.functions
 
 import java.text.Normalizer
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** String-normalization primitives used across the transform layer —
@@ -20,15 +20,11 @@ object TextFunctions {
       .replaceAll("\\p{M}", "")
   }
 
-  private val unaccentUdf = udf(unaccentStr _)
-
   /** Column fast-path: `translate` handles the full Spanish accent set
-    * without leaving whole-stage codegen; the UDF form exists for exotic
-    * input (use [[unaccent]] unless profiling says otherwise). */
+    * without leaving whole-stage codegen; the native `unaccent` SQL
+    * expression (UnaccentExpression) is the full-Unicode form. */
   def unaccent(c: Column): Column =
     translate(c, "áéíóúüñÁÉÍÓÚÜÑ", "aeiouunAEIOUUN")
-
-  def unaccentFull(c: Column): Column = unaccentUdf(c)
 
   /** Reference category normalization: str → lower → unaccent → trim
     * (transform_pipeline.py:63-65). */
@@ -50,9 +46,5 @@ object TextFunctions {
     array_join(
       transform(split(c, "\\s+"), w => coalesce(element_at(m, w), w)),
       " ")
-  }
-
-  def register(spark: SparkSession): Unit = {
-    spark.udf.register("unaccent", unaccentStr _)
   }
 }

@@ -268,7 +268,7 @@ object Warc {
             if (csName == null) java.nio.charset.StandardCharsets.UTF_8
             else java.nio.charset.Charset.forName(csName)
           } catch {
-            case _: Throwable => java.nio.charset.StandardCharsets.UTF_8
+            case scala.util.control.NonFatal(_) => java.nio.charset.StandardCharsets.UTF_8
           }
         val (body, lossy) = decodeWith(bodyBytes, cs)
         (r._hdrs, head, body, csName, lossy, p.length.toLong)

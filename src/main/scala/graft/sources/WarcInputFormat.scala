@@ -315,7 +315,7 @@ class WarcRecordReader extends RecordReader[NullWritable, BytesWritable] {
       while (k < head.length && { r = g.read(head, k, head.length - k); r > 0 })
         k += r
       k == head.length && java.util.Arrays.equals(head, Magic)
-    } catch { case _: Throwable => false } finally probe.close()
+    } catch { case scala.util.control.NonFatal(_) => false } finally probe.close()
   }
 
   private def pushBack(bytes: Array[Byte], n: Int): Unit = {

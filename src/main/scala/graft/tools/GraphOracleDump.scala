@@ -1,8 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
-
 /** Spark-side half of the GRAPH oracle-at-scale gate: runs the planted-
   * graph family ([[graft.ops.Graph]] pageRank / bfsDepths / kCorePeel /
   * triangleCount) against the ×`k` planted Zipf graph — the same input
@@ -21,27 +18,15 @@ object GraphOracleDump {
   def main(args: Array[String]): Unit = {
     val outDir = args.headOption.getOrElse("/tmp/out_graph")
     val k = args.drop(1).headOption.map(_.toInt).getOrElse(4)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Measure.session("graft-graph-oracle-dump")
     import spark.implicits._
 
-    val edgesPath = ScaleData.materializeGraph(spark, 50000L, 8, k, cpus.toInt)
+    val edgesPath = ScaleData.materializeGraph(spark, 50000L, 8, k, Measure.cores)
     val edges = spark.read.parquet(edgesPath)
     new java.io.File(outDir).mkdirs()
 
     def dump(name: String)(df: org.apache.spark.sql.DataFrame): Unit = {
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
+      Measure.reap(spark)
       val t0 = System.nanoTime()
       df.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
       println(f"[graph-dump] $name%-20s ${(System.nanoTime() - t0) / 1e9}%6.1f s")

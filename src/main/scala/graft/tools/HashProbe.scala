@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.SparkEntry
 
@@ -8,7 +7,8 @@ import graft.SparkEntry
   * each named gate so a rewrite can be checked bit-identical against
   * the previous implementation (run before + after, diff the lines).
   * Same canonicalization as the driver: columns sorted by name, rows
-  * hashed order-independently via xor of row hashes.
+  * hashed order-independently via xor of row hashes. Timing is
+  * FloorCheck's job: `runMain graft.tools.FloorCheck <sfDir> [iters] [query...]`.
   */
 object HashProbe {
   def main(args: Array[String]): Unit = {
@@ -16,30 +16,16 @@ object HashProbe {
     val names = if (args.nonEmpty) args.toSeq else Seq(
       "p52_length_deciles", "p81_corpus_datasheet", "p115_conversion_latency",
       "p24_length_quantiles", "p53_quantiles_approx", "p50_approx_quantiles")
-    val spark = SparkSession.builder()
-      .appName("graft-hash-probe").master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", false)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    // SPARK_GRAFT_PROBE_ITERS > 1 turns the probe into a quick idle
-    // timer (per-iteration cache hygiene like the bench loop)
-    val iters = sys.env.getOrElse("SPARK_GRAFT_PROBE_ITERS", "1").toInt
+    val spark = Measure.session("graft-hash-probe")
     for (n <- names) {
-      val secs = (1 to iters).map { _ =>
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-        val df = SparkEntry.queries(n)(spark, sfDir)
-        val cols = df.columns.sorted.toSeq
-        val t0 = System.nanoTime()
-        val h = df
-          .select(xxhash64(cols.map(c => coalesce(col(c).cast("string"), lit(" "))): _*).as("_h"))
-          .agg(expr("bit_xor(_h)").as("s"), count(lit(1)).as("n"))
-          .collect()(0)
-        val sec = (System.nanoTime() - t0) / 1e9
-        println(f"HASH $n rows=${h.getLong(1)} sum=${h.getLong(0)} sec=$sec%.2f cols=${cols.mkString(",")}")
-        sec
-      }
-      if (iters > 1) println(f"TIME $n median=${secs.sorted.apply(iters / 2)}%.2f s")
+      Measure.reap(spark)
+      val df = SparkEntry.queries(n)(spark, sfDir)
+      val cols = df.columns.sorted.toSeq
+      val h = df
+        .select(xxhash64(cols.map(c => coalesce(col(c).cast("string"), lit(" "))): _*).as("_h"))
+        .agg(expr("bit_xor(_h)").as("s"), count(lit(1)).as("n"))
+        .collect()(0)
+      println(s"HASH $n rows=${h.getLong(1)} sum=${h.getLong(0)} cols=${cols.mkString(",")}")
     }
     spark.stop()
   }

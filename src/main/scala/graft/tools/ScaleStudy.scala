@@ -1,11 +1,14 @@
 package graft.tools
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.engine.Tables
 import graft.ops.{AsofJoin, CorpusOps, Dedup, Ffill, TextAnalysis}
 import graft.streaming.EventsStream
+import graft.tools.Measure.sink
 
 /** Scaling study: times the headline operators at 1×/4×/20× the sf0.1
   * corpus (and 1×/10× events) to measure how wall time grows with rows —
@@ -110,12 +113,12 @@ object ScaleData {
 
 /** The headline data-shaped operators against the materialized ×k
   * tables — `graft.Bench`'s scaled tier. Per-op MEDIAN of
-  * SPARK_GRAFT_BENCH_SCALE_ITERS (default 3) iterations: the first
-  * execution of a plan pays codegen compilation + C2 JIT of the
-  * generated classes, which a 100 TB job amortizes over hours — a
-  * single-shot number conflates that fixed cost with the data-shaped
-  * cost this tier exists to measure (round-6 single shots showed ops
-  * at 5-10× their steady state). */
+  * SPARK_GRAFT_BENCH_SCALE_ITERS (default 3) iterations after
+  * [[Measure.warmups]] untimed ones: the first execution of a plan pays
+  * codegen compilation + C2 JIT of the generated classes, which a
+  * 100 TB job amortizes over hours — a single-shot number conflates that
+  * fixed cost with the data-shaped cost this tier exists to measure
+  * (round-6 single shots showed ops at 5-10× their steady state). */
 object ScaledOps {
 
   /** Per-op scaled-tier record: median of the iterations (the headline),
@@ -136,42 +139,17 @@ object ScaledOps {
       embPath: String,
       only: Option[Seq[String]] = None): Seq[ScaledRec] = {
     val iters = sys.env.getOrElse("SPARK_GRAFT_BENCH_SCALE_ITERS", "3").toInt
-    def sink(df: DataFrame): Unit = df.write.mode("overwrite").format("noop").save()
-    def median(xs: Seq[Double]): Double = {
-      val s = xs.sorted
-      if (s.length % 2 == 1) s(s.length / 2) else (s(s.length / 2 - 1) + s(s.length / 2)) / 2.0
-    }
     // entries run EAGERLY while the Seq below is constructed, so the
     // ScaledTier dev-loop filter must apply here, not on the result
     def selected(name: String): Boolean = only.forall(_.exists(name.contains))
     def time(name: String)(f: => Unit): ScaledRec = {
       if (!selected(name)) return ScaledRec(name, Double.NaN, Double.NaN, varied = false)
-      // same block hygiene as Bench's per-query loop: leftovers from the
-      // previous op must not bill this one (untimed)
-      // clearCache BETWEEN OPS, not between iterations — the suite
-      // protocol (Bench reaps between queries; a query's iterations
-      // share its own caches, so iteration 1 is the honest cold build
-      // and the median is the warm steady state). The old raw-RDD sweep
-      // ran between ITERATIONS and leaked the CacheManager entry, so
-      // every later iteration rode a DEAD InMemoryRelation — recompute
-      // with no re-cache, which is exactly the 11.6–171.6 s containment
-      // variance the ScaledRec docstring records. Entries must die with
-      // their storage, and at the same boundary the suite uses.
-      spark.sharedState.cacheManager.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-      System.gc()
-      val times = (1 to iters).flatMap { _ =>
-        val t0 = System.nanoTime()
-        try { f; Some((System.nanoTime() - t0) / 1e9) }
-        catch {
-          case e: Throwable =>
-            System.err.println(s"[bench-scaled] $name FAILED: ${e.getMessage}")
-            None
-        }
-      }
-      if (times.isEmpty) ScaledRec(name, -1.0, -1.0, varied = false)
-      else ScaledRec(name, median(times), times.min,
-        varied = times.length >= 2 && times.min > 0 && times.max / times.min > 3.0)
+      // reap BETWEEN ops, never between iterations: an op's iterations
+      // share its own caches, so the median is the warm steady state
+      Measure.reap(spark)
+      val timed = Measure.run(Measure.warmups, iters, s"[bench-scaled] $name")(f)
+      if (timed.samples.isEmpty) ScaledRec(name, -1.0, -1.0, varied = false)
+      else ScaledRec(name, Measure.median(timed.secs), timed.secs.min, timed.varied)
     }
     val docs = spark.read.parquet(docsPath)
     val ev = spark.read.parquet(eventsPath)
@@ -491,7 +469,7 @@ object ScaledOps {
       val hits = approx.join(exact.select("qid", "nid"), Seq("qid", "nid"), "left_semi").count()
       "ann_ivfpq_recall_pct" -> (if (total == 0) -1.0 else hits * 100.0 / total)
     } catch {
-      case e: Throwable =>
+      case NonFatal(e) =>
         System.err.println(s"[bench-scaled] ann_ivfpq_recall_pct FAILED: ${e.getMessage}")
         "ann_ivfpq_recall_pct" -> -1.0
     }
@@ -505,36 +483,23 @@ object ScaleStudy {
     (r, (System.nanoTime() - t0) / 1e9)
   }
 
-  private def sink(df: DataFrame): Unit =
-    df.write.mode("overwrite").format("noop").save()
-
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     // optional section filter: docs | events | headliners | graph
     val section = args.drop(1).headOption.getOrElse("all")
     def on(s: String) = section == "all" || section == s
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = Measure.cores
+    val spark = Measure.session("graft-scale-study")
 
     // materialize scaled inputs to parquet so every measured op reads
     // from storage like a real job (not from an in-memory union plan);
     // lazy per-section so a filtered run only materializes what it uses
     lazy val docPaths = Seq(1, 4, 20, 50).map(k =>
-      k -> ScaleData.materialize(spark, sfDir, "documents", k, cpus.toInt)).toMap
+      k -> ScaleData.materialize(spark, sfDir, "documents", k, cpus)).toMap
     lazy val embPaths = Seq(1, 4, 20, 50).map(k =>
-      k -> ScaleData.materialize(spark, sfDir, "embeddings", k, cpus.toInt)).toMap
+      k -> ScaleData.materialize(spark, sfDir, "embeddings", k, cpus)).toMap
     lazy val eventPaths = Seq(1, 10, 50).map(k =>
-      k -> ScaleData.materialize(spark, sfDir, "events", k, cpus.toInt)).toMap
+      k -> ScaleData.materialize(spark, sfDir, "events", k, cpus)).toMap
 
     def report(op: String, k: Int, rows: Long, sec: Double): Unit =
       println(f"[scale] $op%-22s x$k%-3d rows=$rows%-9d ${sec}%8.2f s")
@@ -659,7 +624,7 @@ object ScaleStudy {
     // Node counts scale ×1/×4/×20 at constant avg degree, so edge
     // volume scales linearly while the hub degree scales with it.
     if (on("graph")) for (k <- Seq(1, 4, 20, 50)) {
-      val path = ScaleData.materializeGraph(spark, 50000L, 8, k, cpus.toInt)
+      val path = ScaleData.materializeGraph(spark, 50000L, 8, k, cpus)
       val edges = spark.read.parquet(path)
       val nE = edges.count()
       val hub = edges.select(explode(array(col("src"), col("dst"))).as("v"))

@@ -1,6 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.util.control.NonFatal
+
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** SCALED correctness pins — the gate the sf0.01 DuckDB oracle cannot
@@ -57,22 +59,11 @@ object ScaledCheck {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val pinPath = args.drop(1).headOption.getOrElse("SCALED_PINS.txt")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Measure.session("graft-scaled-check")
 
-    val docsPath = ScaleData.materialize(spark, sfDir, "documents", 20, cpus.toInt)
-    val eventsPath = ScaleData.materialize(spark, sfDir, "events", 10, cpus.toInt)
-    val embPath = ScaleData.materialize(spark, sfDir, "embeddings", 20, cpus.toInt)
+    val docsPath = ScaleData.materialize(spark, sfDir, "documents", 20, Measure.cores)
+    val eventsPath = ScaleData.materialize(spark, sfDir, "events", 10, Measure.cores)
+    val embPath = ScaleData.materialize(spark, sfDir, "embeddings", 20, Measure.cores)
     val docs = spark.read.parquet(docsPath)
     val ev = spark.read.parquet(eventsPath)
       .withColumn("ts", to_timestamp(col("ts")))
@@ -134,7 +125,7 @@ object ScaledCheck {
       // collapses that graph to ~1 edge — a vacuous pin.)
       "pagerank_planted" -> (() => fingerprint(graft.ops.Graph.pageRank(
         spark.read.parquet(
-          ScaleData.materializeGraph(spark, 50000L, 8, 4, cpus.toInt)),
+          ScaleData.materializeGraph(spark, 50000L, 8, 4, Measure.cores)),
         iters = 3))),
       // round-14: the rest of the planted-graph family — all-integer
       // (BFS min-depths, peel survivors, triangle counts), so the
@@ -142,15 +133,15 @@ object ScaledCheck {
       // replays all four in DuckDB (mode="oracle" beside these pins)
       "bfs_planted" -> (() => fingerprint(graft.ops.Graph.bfsDepths(
         spark.read.parquet(
-          ScaleData.materializeGraph(spark, 50000L, 8, 4, cpus.toInt)),
+          ScaleData.materializeGraph(spark, 50000L, 8, 4, Measure.cores)),
         spark.range(1L, 2L).toDF("node"), maxDepth = 3))),
       "kcore_planted" -> (() => fingerprint(graft.ops.Graph.kCorePeel(
         spark.read.parquet(
-          ScaleData.materializeGraph(spark, 50000L, 8, 4, cpus.toInt)),
+          ScaleData.materializeGraph(spark, 50000L, 8, 4, Measure.cores)),
         k = 8, rounds = 3))),
       "triangles_planted" -> (() => fingerprint(graft.ops.Graph.triangleCount(
         spark.read.parquet(
-          ScaleData.materializeGraph(spark, 50000L, 8, 4, cpus.toInt))))),
+          ScaleData.materializeGraph(spark, 50000L, 8, 4, Measure.cores))))),
       // ---- x10 events ----------------------------------------------
       "kaplan_meier" -> (() => fingerprint(
         graft.ops.Stats.kaplanMeier(subj, "dur", "ev"))),
@@ -262,14 +253,13 @@ object ScaledCheck {
       }))
 
     val results = checks.map { case (name, f) =>
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
+      Measure.reap(spark)
       val t0 = System.nanoTime()
       val out = try {
         val (n, h) = f()
         (n, h, null: String)
       } catch {
-        case e: Throwable => (-1L, 0L, String.valueOf(e.getMessage).take(200))
+        case NonFatal(e) => (-1L, 0L, String.valueOf(e.getMessage).take(200))
       }
       val sec = (System.nanoTime() - t0) / 1e9
       println(f"[scaled-check] $name%-20s rows=${out._1}%-9d hash=${out._2}%-21d ${sec}%6.1f s" +
@@ -342,11 +332,11 @@ object ScaledCheck {
                 java.nio.file.Files.readString(refPath).trim
               else "" // fresh ref only in packed-refs: treat as unknown
             } else head
-          } catch { case _: Throwable => "" }
+          } catch { case NonFatal(_) => "" }
           val stale = recRev.isEmpty || headRev.isEmpty || recRev != headRev
           s""","oracle_stale":$stale,"oracle":$body"""
         } catch {
-          case e: Throwable =>
+          case NonFatal(e) =>
             System.err.println(
               s"[scaled-check] SCALED_ORACLE.json unparseable, skipping splice: ${e.getMessage}")
             ""

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Standalone runner for `graft.Bench`'s scaled tier — materializes the
   * ×SCALE inputs and runs [[ScaledOps.run]] without the 330-query gate
   * suite in front of it. The dev loop for iterating on a single scaled
@@ -11,23 +9,12 @@ object ScaledTier {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val only = args.drop(1).headOption.map(_.split(',').toSeq.filter(_.nonEmpty))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Measure.session("graft-scaled-tier")
     val scale = sys.env.getOrElse("SPARK_GRAFT_BENCH_SCALE", "20").toInt
     val evScale = math.max(scale / 2, 1)
-    val docsPath = ScaleData.materialize(spark, sfDir, "documents", scale, cpus.toInt)
-    val eventsPath = ScaleData.materialize(spark, sfDir, "events", evScale, cpus.toInt)
-    val embPath = ScaleData.materialize(spark, sfDir, "embeddings", scale, cpus.toInt)
+    val docsPath = ScaleData.materialize(spark, sfDir, "documents", scale, Measure.cores)
+    val eventsPath = ScaleData.materialize(spark, sfDir, "events", evScale, Measure.cores)
+    val embPath = ScaleData.materialize(spark, sfDir, "embeddings", scale, Measure.cores)
     val ops = ScaledOps.run(spark, docsPath, eventsPath, embPath, only)
     ops.foreach { r =>
       val tag = if (r.varied) "  VARIED>3x" else ""

@@ -227,7 +227,7 @@ class PlanSpec extends AnyFunSuite {
       "p18_hom_pipeline_intended")
     SparkEntry.queries.keys.filterNot(allowNl).foreach { name =>
       val p = try SparkEntry.queries(name)(spark, dir).queryExecution.executedPlan.toString
-        catch { case _: Throwable => "" }
+        catch { case scala.util.control.NonFatal(_) => "" }
       assert(!p.contains("CartesianProduct"), s"$name plans a CartesianProduct")
     }
   }

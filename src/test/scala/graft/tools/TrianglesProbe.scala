@@ -3,8 +3,7 @@ package graft.tools
 import java.lang.management.ManagementFactory
 
 import scala.jdk.CollectionConverters._
-
-import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 
 /** Root-cause probe for the p134_triangles idle-floor drift (round-15
   * verdict: warm floor ~4.0 s in round 14 → ~5.2 s in round 15 with
@@ -26,18 +25,7 @@ object TrianglesProbe {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val iters = args.drop(1).headOption.map(_.toInt).getOrElse(6)
     val preloadN = args.drop(2).headOption.map(_.toInt).getOrElse(0)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Measure.session("graft-triangles-probe")
 
     def gcMillis(): Long = ManagementFactory.getGarbageCollectorMXBeans
       .asScala.map(_.getCollectionTime).sum
@@ -71,18 +59,16 @@ object TrianglesProbe {
         .filterNot(_ == "p134_triangles").take(preloadN)
       println(s"[probe] preloading ${others.size} gates...")
       others.foreach { n =>
-        try graft.SparkEntry.queries(n)(spark, sfDir)
-          .write.mode("overwrite").format("noop").save()
-        catch { case e: Throwable =>
+        try Measure.sink(graft.SparkEntry.queries(n)(spark, sfDir))
+        catch { case NonFatal(e) =>
           System.err.println(s"[probe] preload $n failed: ${e.getMessage}") }
       }
       println(s"[probe] preload done; janino=${janino()} jit_ms=${jitMillis()}")
     }
 
     (1 to iters).foreach { i =>
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
+      Measure.reap(spark)
       stages.clear()
-      System.gc()
       val df = graft.SparkEntry.queries("p134_triangles")(spark, sfDir)
       val qe = df.queryExecution
       val gc0 = gcMillis(); val jit0 = jitMillis(); val (jc0, jms0) = janino()
